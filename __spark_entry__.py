@@ -1077,10 +1077,8 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bytewax_spark.functions import dedup as dd
 
     emb = _t(spark, sf_dir, "embeddings")
-    # 10 distinct labels << shuffle partitions: slice the quadratic
-    # per-block pair work (see embedding_cosine_pairs docstring)
     return dd.embedding_cosine_pairs(
-        emb, "embedding", "vec_id", "label", threshold=0.35, n_slices=8
+        emb, "embedding", "vec_id", "label", threshold=0.35
     )
 
 
@@ -1751,9 +1749,9 @@ def winnow_fingerprints_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MOSS winnowing fingerprints (functions/text.py
     winnow_fingerprints, SIGMOD'03): per-doc windowed-min k-gram
     hashes, position-aware — any shared substring of window+k-1 chars
-    is guaranteed to collide. Codegen md5 over exploded gram rows +
-    one windowed min per doc; see the function docstring for why the
-    zero-shuffle array-lambda formulation loses."""
+    is guaranteed to collide. One shuffle-free mapInArrow kernel per
+    scan split (grams → md5 → packed sliding min → per-doc distinct);
+    see the function docstring."""
     from bytewax_spark.functions import text as tx
 
     docs = _t(spark, sf_dir, "documents")
@@ -1813,10 +1811,7 @@ def semdedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bytewax_spark.functions import dedup as dd
 
     emb = _t(spark, sf_dir, "embeddings")
-    # 10 distinct labels << shuffle partitions: n_slices=8 spreads each
-    # cell's quadratic pair work over 80 (slice, cell) keys — the pair
-    # SET is unchanged, only its distribution
-    out = dd.semdedup(emb, "embedding", "vec_id", "label", threshold=0.35, n_slices=8)
+    out = dd.semdedup(emb, "embedding", "vec_id", "label", threshold=0.35)
     return out.select("vec_id", "label")
 
 
@@ -6394,7 +6389,7 @@ def adamic_adar_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     or degree exchanges), folds the adjacency anti-join into the
     pair aggregation as ``_w = -1`` sentinel rows off the raw edge
     stream, and ships wedges as SUFFIX ARRAYS partitioned on id_a
-    alone, exploded post-shuffle into a same-stage aggregate (~8 B
+    alone into a post-shuffle numpy sort-aggregation kernel (~8 B
     per pair through the exchange instead of a 24 B row). The ~74M
     capped wedge set still aggregates to ~60M distinct pairs; DuckDB
     runs the identical capped oracle fully in-process — and spills
@@ -8509,11 +8504,10 @@ def knn_label_agreement_lsh_embeddings(spark: SparkSession, sf_dir: str) -> Data
     shuffle on the bucket key into a per-bucket Arrow kernel (numpy
     dense cosine matrix + top-k cut; rows ship once per bucket, only
     5-column verdict rows return) — never a broadcast nested loop
-    over the corpus. The kernel is the measured-faster default (7x
-    vs the pure-JVM join: Spark's higher-order array functions
-    evaluate interpreted); impl="sql" keeps the expression plan and
-    a parity test asserts identical rows. The brute-force variant
-    stays the QA-sample path; this is the 100 TB path."""
+    over the corpus. A kernel, not a bucket self-join: Spark's
+    higher-order array functions evaluate interpreted, so the join
+    shape measured 7x slower. The brute-force variant stays the
+    QA-sample path; this is the 100 TB path."""
     from bytewax_spark.functions import similarity as sim
 
     emb = _t(spark, sf_dir, "embeddings")

@@ -477,37 +477,40 @@ def kcore(
     )
 
 
-def _pair_suffix_agg_arrow(
+def _pair_suffix_agg(
     pre: DataFrame, out_col: str, threshold: int, shuffle_parts: int
 ) -> DataFrame:
     """Aggregate the wedge suffix-array stream ``(id_a, _bs, _w)`` into
-    surviving non-adjacent pairs — the Arrow replacement for the
-    ``explode → HashAggregate`` tail of :func:`adamic_adar` /
-    :func:`common_neighbors` (guide §4.2: hand whole batches to
-    vectorized native code instead of a 60M-entry JVM hash map).
+    surviving non-adjacent pairs for :func:`adamic_adar` /
+    :func:`common_neighbors` with a numpy sort-aggregation (guide
+    §4.2: hand whole batches to vectorized native code instead of a
+    60M-entry JVM hash map).
 
     Exactness: the stream is hash-partitioned on ``id_a`` first, and
     the group key is ``(id_a, id_b)`` — every group lives entirely in
     one partition, so a per-partition aggregation IS the global one.
     Per partition the kernel flattens the suffix arrays with
     ``np.repeat`` (the Arrow list values buffer is already the
-    concatenated id_b stream), sorts one packed ``uint64`` key (or
-    ``np.lexsort`` when ids exceed 32 bits / are negative — semantics
-    hold for any long ids), and computes the group sums/mins with
+    concatenated id_b stream), sorts one packed ``uint64`` key, and
+    computes the group sums/mins with
     ``np.add.reduceat``/``np.minimum.reduceat`` — a cache-friendly
     sort aggregation in ~3 flat int64 arrays (~50 MB/task at sf0.1)
     instead of ~3 GB of UnsafeRow hash maps, which on a
     memory-overcommitted host is the difference between a 4 s and a
-    40 s run (measured r8). Sentinel rows (``_w < 0``, one per
-    adjacent pair, duplicates welcome) surface as ``min < 0`` and
-    drop the group; sums add only positive weights, matching the SQL
-    shape's ``sum(when(_w > 0, _w).otherwise(0))`` bit for bit.
+    40 s run (measured r8). Ids that do not pack into 32 bits
+    (negative, wider, or not integers at all — strings) are first
+    dense-encoded per partition with ``np.unique(return_inverse=True)``
+    and decoded on the way out, so every orderable id type takes the
+    same packed path; the output id type is the input's. Sentinel
+    rows (``_w < 0``, one per adjacent pair, duplicates welcome)
+    surface as ``min < 0`` and drop the group; sums add only positive
+    weights.
 
-    Scale note: per-task memory is total_pairs / shuffle_parts — the
-    same quantity that sizes the SQL shape's hash maps; size
+    Scale note: per-task memory is total_pairs / shuffle_parts; size
     ``spark.sql.shuffle.partitions`` for the cluster as usual (the
     kernel is linear + one sort, and its arrays are ~6x smaller than
-    the equivalent UnsafeRow state)."""
+    the equivalent UnsafeRow hash-aggregate state)."""
+    id_type = pre.schema["id_a"].dataType.simpleString()
 
     def gen(batches):
         import numpy as np
@@ -517,7 +520,9 @@ def _pair_suffix_agg_arrow(
         a_chunks: list = []
         b_chunks: list = []
         w_chunks: list = []
+        arrow_type = None
         for batch in batches:
+            arrow_type = batch.column(0).type
             ids = batch.column(0).to_numpy(zero_copy_only=False)
             bs = batch.column(1)
             w = batch.column(2).to_numpy(zero_copy_only=False)
@@ -534,39 +539,39 @@ def _pair_suffix_agg_arrow(
         del a_chunks, b_chunks, w_chunks
         if A.size == 0:
             return
-        if A.min() >= 0 and B.min() >= 0 and A.max() < (1 << 32) and B.max() < (1 << 32):
-            K = (A.astype(np.uint64) << np.uint64(32)) | B.astype(np.uint64)
-            order = np.argsort(K)
-            K = K[order]
-            Ws = W[order]
-            starts = np.flatnonzero(np.r_[True, K[1:] != K[:-1]])
-            sums = np.add.reduceat(np.where(Ws > 0, Ws, 0), starts)
-            mins = np.minimum.reduceat(Ws, starts)
-            keep = (mins > 0) & (sums >= threshold)
-            Kk = K[starts[keep]]
-            out_a = (Kk >> np.uint64(32)).astype(np.int64)
-            out_b = Kk.astype(np.uint32).astype(np.int64)
-        else:
-            order = np.lexsort((B, A))
-            A = A[order]
-            B = B[order]
-            Ws = W[order]
-            starts = np.flatnonzero(
-                np.r_[True, (A[1:] != A[:-1]) | (B[1:] != B[:-1])]
-            )
-            sums = np.add.reduceat(np.where(Ws > 0, Ws, 0), starts)
-            mins = np.minimum.reduceat(Ws, starts)
-            keep = (mins > 0) & (sums >= threshold)
-            out_a = A[starts[keep]]
-            out_b = B[starts[keep]]
+        codes = None
+        if not (
+            np.issubdtype(A.dtype, np.integer)
+            and min(A.min(), B.min()) >= 0
+            and max(A.max(), B.max()) < (1 << 32)
+        ):
+            codes, inv = np.unique(np.concatenate([A, B]), return_inverse=True)
+            A, B = inv[: A.size], inv[A.size :]
+        K = (A.astype(np.uint64) << np.uint64(32)) | B.astype(np.uint64)
+        order = np.argsort(K)
+        K = K[order]
+        Ws = W[order]
+        starts = np.flatnonzero(np.r_[True, K[1:] != K[:-1]])
+        sums = np.add.reduceat(np.where(Ws > 0, Ws, 0), starts)
+        mins = np.minimum.reduceat(Ws, starts)
+        keep = (mins > 0) & (sums >= threshold)
+        Kk = K[starts[keep]]
+        out_a = (Kk >> np.uint64(32)).astype(np.int64)
+        out_b = Kk.astype(np.uint32).astype(np.int64)
+        if codes is not None:
+            out_a, out_b = codes[out_a], codes[out_b]
         if out_a.size:
             yield pa.RecordBatch.from_arrays(
-                [pa.array(out_a), pa.array(out_b), pa.array(sums[keep])],
+                [
+                    pa.array(out_a, type=arrow_type),
+                    pa.array(out_b, type=arrow_type),
+                    pa.array(sums[keep]),
+                ],
                 names=["id_a", "id_b", out_col],
             )
 
     return pre.repartition(shuffle_parts, "id_a").mapInArrow(
-        gen, f"id_a long, id_b long, {out_col} long"
+        gen, f"id_a {id_type}, id_b {id_type}, {out_col} long"
     )
 
 
@@ -576,8 +581,6 @@ def common_neighbors(
     dst: str = "id_b",
     min_common: int = 2,
     max_degree: int | None = None,
-    n_slices: int = 1,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Link prediction by common neighbors (Liben-Nowell & Kleinberg
     2003, public): for every NON-adjacent pair at distance 2, the
@@ -597,36 +600,23 @@ def common_neighbors(
     symmetrized RAW pair stream (no ``distinct``) hash-repartitions
     on the middle once and ``collect_set`` dedups + builds the sorted
     adjacency array in the same aggregate; degree is ``size(_ns)``.
-    Wedge pairs ship to the pair aggregation as PLAIN-long SUFFIX
-    ARRAYS ``(id_a, [id_b...])`` partitioned on ``id_a`` and exploded
-    post-shuffle (subset-of-grouping-keys partitioning keeps the
-    explode + both agg phases in one stage; the r6 shape carried
-    ``(neighbor, degree)`` structs through an exploded per-pair
-    stream — triple the exchange bytes), and the adjacency anti-join
-    is FOLDED INTO the pair aggregation via sentinel rows (``_c =
-    -1``, taken straight from the raw symmetrized stream — duplicates
-    are harmless because the aggregate sums only positive counts and
-    detects adjacency via ``min(_c) < 0``): an adjacent pair is
-    dropped by one filter.
+    Wedge pairs ship to the pair aggregation as SUFFIX ARRAYS
+    ``(id_a, [id_b...])`` partitioned on ``id_a`` (the r6 shape
+    carried ``(neighbor, degree)`` structs through an exploded
+    per-pair stream — triple the exchange bytes) and are counted by
+    the :func:`_pair_suffix_agg` numpy sort-aggregation; the
+    adjacency anti-join is FOLDED INTO that aggregation via sentinel
+    rows (``_c = -1``, taken straight from the raw symmetrized stream
+    — duplicates are harmless because the kernel sums only positive
+    counts and detects adjacency via ``min(_c) < 0``): an adjacent
+    pair is dropped by one filter. Ids may be of any orderable type.
     Endpoint degrees for Jaccard are joined AFTER the count filter,
     onto the (tiny) surviving pair set, from a projection of the
     SAME adjacency aggregate — the r6 objection to post-hoc degree
     joins (they re-executed the whole edge-construction subtree) no
     longer applies because Catalyst's ReuseExchange shares the one
-    middle-key exchange. The pair stream is pre-repartitioned on the
-    pair key: its dedup factor is near 1, so the map-side partial agg
-    cannot shrink the shuffle and hashing raw pairs straight to their
-    reducer keeps the partial pass same-stage. ``n_slices`` is
-    retained for API compatibility; slicing is a no-op now.
-
-    ``impl="arrow"`` (default, r8) replaces the post-exchange
-    ``explode → HashAggregate`` with the :func:`_pair_suffix_agg_arrow`
-    numpy sort-aggregation — value-identical (parity-tested + oracle),
-    ~6x smaller per-task state; ``impl="sql"`` keeps the r7 plan."""
-    if n_slices < 1:
-        raise ValueError(f"n_slices must be >= 1, got {n_slices}")
-    if impl not in ("arrow", "sql"):
-        raise ValueError(f"impl must be 'arrow' or 'sql', got {impl!r}")
+    middle-key exchange. Checked against a brute-force reference
+    (tests/test_graph.py) and the DuckDB oracle."""
     sym = (
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("u"),
@@ -656,10 +646,7 @@ def common_neighbors(
     if max_degree is not None:
         wmid = wmid.filter(F.size("_ns") <= max_degree)
     ex = wmid.select(F.posexplode("_ns").alias("_i", "id_a"), "_ns")
-    # suffix arrays through the exchange + post-shuffle explode, same
-    # rationale as adamic_adar: HashPartitioning(id_a) satisfies the
-    # (id_a, id_b) grouping, so the explode and both aggregate phases
-    # stay in the one post-shuffle stage.
+    # suffix arrays through the exchange, same rationale as adamic_adar
     arrs = ex.select(
         "id_a",
         F.slice("_ns", F.col("_i") + 2, F.size("_ns")).alias("_bs"),
@@ -670,25 +657,9 @@ def common_neighbors(
         F.array(F.col("v")).alias("_bs"),
         F.lit(-1).cast("long").alias("_c"),
     )
-    if impl == "arrow":
-        wedges = _pair_suffix_agg_arrow(
-            arrs.unionByName(sent), "common", min_common, shuffle_parts
-        )
-    else:
-        wedges = (
-            arrs.unionByName(sent)
-            .repartition(shuffle_parts, "id_a")
-            .select("id_a", F.explode("_bs").alias("id_b"), "_c")
-            .groupBy("id_a", "id_b")
-            .agg(
-                F.sum(
-                    F.when(F.col("_c") > 0, F.col("_c")).otherwise(0)
-                ).alias("common"),
-                F.min("_c").alias("_mn"),
-            )
-            .filter((F.col("_mn") > 0) & (F.col("common") >= min_common))
-            .select("id_a", "id_b", "common")
-        )
+    wedges = _pair_suffix_agg(
+        arrs.unionByName(sent), "common", min_common, shuffle_parts
+    )
     deg = nbrs.select(F.col("m"), F.size("_ns").cast("long").alias("_d"))
     da = deg.select(F.col("m").alias("id_a"), F.col("_d").alias("_da"))
     db = deg.select(F.col("m").alias("id_b"), F.col("_d").alias("_db"))
@@ -714,8 +685,6 @@ def adamic_adar(
     dst: str = "id_b",
     min_score_micro: int = 1,
     max_degree: int | None = None,
-    n_slices: int = 1,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Adamic-Adar link prediction (Adamic & Adar 2003, public):
     common neighbors weighted by 1/ln(degree) — a shared RARE neighbor
@@ -737,29 +706,18 @@ def adamic_adar(
     mid-table join to carry it). Wedges are shipped to the pair
     aggregation as SUFFIX ARRAYS ``(id_a, [id_b...], _w)`` — one row
     per (middle, position), ~8 bytes per pair — hash-partitioned on
-    ``id_a`` alone and exploded AFTER the exchange; partitioning on a
-    subset of the grouping keys satisfies the aggregate's clustering
-    requirement, so the explode + partial + final agg share the one
-    post-shuffle stage (each unordered pair still appears EXACTLY
+    ``id_a`` alone and summed by the :func:`_pair_suffix_agg`
+    numpy sort-aggregation (each unordered pair still appears EXACTLY
     once: ``id_a < id_b`` by the sorted array). The adjacency
     anti-join is FOLDED INTO the pair aggregation: sentinel rows
     with ``_w = -1`` are taken STRAIGHT from the raw symmetrized
-    stream (duplicates are harmless — the aggregate sums only
-    positive weights and detects adjacency via ``min(_w) < 0``), so
-    an adjacent pair is dropped by one filter with no separate join
+    stream (duplicates are harmless — the kernel sums only positive
+    weights and detects adjacency via ``min(_w) < 0``), so an
+    adjacent pair is dropped by one filter with no separate join
     stage, no edge-side shuffle at corpus scale, and no second pass
-    over the adjacency aggregate.
-    ``n_slices`` is retained for API compatibility; the explicit
-    repartition pins parallelism, so slicing is a no-op.
-
-    ``impl="arrow"`` (default, r8) replaces the post-exchange
-    ``explode → HashAggregate`` with the :func:`_pair_suffix_agg_arrow`
-    numpy sort-aggregation — value-identical (parity-tested + oracle),
-    ~6x smaller per-task state; ``impl="sql"`` keeps the r7 plan."""
-    if n_slices < 1:
-        raise ValueError(f"n_slices must be >= 1, got {n_slices}")
-    if impl not in ("arrow", "sql"):
-        raise ValueError(f"impl must be 'arrow' or 'sql', got {impl!r}")
+    over the adjacency aggregate. Ids may be of any orderable type;
+    checked against a brute-force reference (tests/test_graph.py)
+    and the DuckDB oracle."""
     sym = (
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("u"),
@@ -793,11 +751,8 @@ def adamic_adar(
     # (id_a, [id_b...], _w) is ~8 bytes per pair plus one row overhead
     # per (middle, position) instead of a 24-byte row per pair — ~3x
     # fewer exchange bytes and ~25x fewer shuffle rows at sf0.1. The
-    # explode happens AFTER the repartition: HashPartitioning(id_a)
-    # satisfies the (id_a, id_b) grouping's ClusteredDistribution
-    # (partitioning on a subset of the grouping keys), so the partial
-    # + final aggregate run in the SAME post-shuffle stage — no second
-    # exchange. Skew note: this hashes on id_a alone; per-partition
+    # kernel aggregates each id_a partition whole, so there is no
+    # second exchange. Skew note: this hashes on id_a alone; per-partition
     # pair volume is bounded by deg(id_a) x max_degree, so set
     # max_degree on hub-heavy graphs (the same knob that bounds the
     # wedge count itself).
@@ -812,23 +767,8 @@ def adamic_adar(
         F.array(F.col("v")).alias("_bs"),
         F.lit(-1).cast("long").alias("_w"),
     )
-    if impl == "arrow":
-        return _pair_suffix_agg_arrow(
-            arrs.unionByName(sent), "aa_micro", min_score_micro, shuffle_parts
-        )
-    return (
-        arrs.unionByName(sent)
-        .repartition(shuffle_parts, "id_a")
-        .select("id_a", F.explode("_bs").alias("id_b"), "_w")
-        .groupBy("id_a", "id_b")
-        .agg(
-            F.sum(F.when(F.col("_w") > 0, F.col("_w")).otherwise(0)).alias(
-                "aa_micro"
-            ),
-            F.min("_w").alias("_mn"),
-        )
-        .filter((F.col("_mn") > 0) & (F.col("aa_micro") >= min_score_micro))
-        .select("id_a", "id_b", "aa_micro")
+    return _pair_suffix_agg(
+        arrs.unionByName(sent), "aa_micro", min_score_micro, shuffle_parts
     )
 
 

@@ -841,8 +841,6 @@ def knn_label_agreement_lsh(
     n_planes: int = 8,
     dims: int | None = None,
     seed: int = 42,
-    fanout: int = 16,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Corpus-scale kNN label-noise screen — the LSH-bucketed path the
     brute-force :func:`knn_label_agreement` docstring mandates at
@@ -857,99 +855,23 @@ def knn_label_agreement_lsh(
     verdict). Size ``n_planes`` with :func:`adaptive_n_planes` so
     expected bucket size stays constant as the corpus grows.
 
-    Two implementations, bit-identical outputs (asserted in
-    tests/test_ml_prep.py): ``impl="arrow"`` (default) groups
-    by bucket and runs ONE ``applyInPandas`` kernel per bucket — the
-    bucket's vectors arrive once, numpy does the dense B×B cosine
-    matrix and the per-probe top-k cut, and only the 5-column verdict
-    rows come back. ``impl="sql"`` is the pure-JVM expression plan
-    (bucket equi self-join → per-pair ``zip_with``/``aggregate``
-    cosine → two-phase rank). The kernel is the default because
-    Spark's higher-order array functions do NOT participate in
-    whole-stage codegen — they evaluate interpreted, ~17 µs per
-    64-dim cosine measured, so the join shape pays 7× more wall time
-    producing the SAME pairs (7.6 s vs 1.1 s at sf0.1; an unrolled
-    element_at sum was worse still — the 64-term expression tree
-    overflows JIT method limits). Both paths rank by the ROUNDED
-    (6 dp) cosine with id ascending as the tie-break, so an external
-    SQL oracle reproduces the selection exactly.
+    Groups by bucket and runs ONE ``applyInPandas`` kernel per bucket:
+    the bucket's vectors arrive once, numpy computes the cosine matrix
+    (float64, rounded half-up to 6 dp before ranking so ordering is
+    engine-exact), per-probe neighbors are the top-k by (rounded
+    cosine desc, id asc) excluding self, and only the 5-column
+    verdict rows come back. An external SQL oracle reproduces the
+    selection exactly; tests/test_ml_prep.py checks it against a
+    brute-force reference. A kernel rather than a bucket self-join
+    because Spark's higher-order array functions do NOT participate
+    in whole-stage codegen — they evaluate interpreted, ~17 µs per
+    64-dim cosine measured, so the join shape paid 7× more wall time
+    for the SAME pairs (7.6 s vs 1.1 s at sf0.1).
 
-    Scale shape (either impl): ONE shuffle on the bucket key (never a
-    broadcast nested loop over the corpus), per-bucket cost quadratic
-    in bucket size — bounded by plane count; size planes so buckets
-    stay O(100-1000) rows and the kernel's B×B matrix stays a few MB.
-    ``fanout`` only affects ``impl="sql"``'s two-phase rank; the
-    kernel cuts top-k inside its bucket and needs no subbucketing."""
-    if impl == "arrow":
-        return _knn_lsh_arrow(
-            df, vec_col, id_col, label_col, k, n_planes, dims, seed
-        )
-    if impl != "sql":
-        raise ValueError(f"impl must be 'arrow' or 'sql', got {impl!r}")
-    b = df.select(
-        F.col(id_col),
-        F.col(label_col),
-        as_double(vec_col).alias("_v"),
-        lsh_bucket_col(vec_col, n_planes, dims, seed).alias("_b"),
-    )
-    left = b.select(
-        F.col(id_col).alias("_pid"),
-        F.col(label_col).alias("_plab"),
-        F.col("_v").alias("_pv"),
-        "_b",
-    )
-    right = b.select(
-        F.col(id_col).alias("_nid"),
-        F.col(label_col).alias("_nlab"),
-        F.col("_v").alias("_nv"),
-        "_b",
-    )
-    cand = (
-        left.join(right, "_b")
-        .filter(F.col("_pid") != F.col("_nid"))
-        .select(
-            "_pid",
-            "_plab",
-            "_nid",
-            "_nlab",
-            F.round(cosine(F.col("_pv"), F.col("_nv")), 6).alias("cosine"),
-        )
-    )
-    from .topk import top_k_per_group
-
-    top = top_k_per_group(
-        cand, "_pid", [F.col("cosine").desc()], "_nid", k, fanout
-    )
-    return (
-        top.groupBy(
-            F.col("_pid").alias(id_col), F.col("_plab").alias(label_col)
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_nbrs"),
-            F.sum((F.col("_nlab") == F.col("_plab")).cast("long")).alias(
-                "n_same"
-            ),
-        )
-        .withColumn("agree_ppm", F.expr("(n_same * 1000000L) div n_nbrs"))
-    )
-
-
-def _knn_lsh_arrow(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    label_col: str,
-    k: int,
-    n_planes: int,
-    dims: int | None,
-    seed: int,
-) -> DataFrame:
-    """Per-bucket Arrow kernel for :func:`knn_label_agreement_lsh`:
-    each bucket's rows ship ONCE into pandas, numpy computes the
-    cosine matrix (float64, rounded to 6 dp before ranking so
-    ordering is engine-exact), and per-probe neighbors are the top-k
-    by (rounded cosine desc, id asc) excluding self. Buckets smaller
-    than 2 emit nothing (no neighbors, no verdict).
+    Scale shape: ONE shuffle on the bucket key (never a broadcast
+    nested loop over the corpus), per-bucket cost quadratic in bucket
+    size — bounded by plane count; size planes so buckets stay
+    O(100-1000) rows and the kernel's B×B matrix stays a few MB.
 
     Skew guard: the cosine matrix is computed in ROW BLOCKS sized so
     one block is <= ~64 MB of float64 — a degenerate bucket (e.g. a
@@ -1006,7 +928,7 @@ def _knn_lsh_arrow(
         as_double(vec_col).alias("_v"),
         lsh_bucket_col(vec_col, n_planes, dims, seed).alias("_b"),
     )
-    # pin the kernel stage's fan-out (see _embedding_cosine_pairs_arrow:
+    # pin the kernel stage's fan-out (see dedup.embedding_cosine_pairs:
     # AQE coalesces the small bucket shuffle; per-task cost is
     # quadratic per bucket, so coalescing serializes the kernels); the
     # explicit-count HashPartitioning satisfies applyInPandas'

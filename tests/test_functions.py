@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from bytewax_spark.functions import dedup, multimodal, similarity, text
+from tests import reference
 from tests.conftest import load
 
 
@@ -667,6 +668,23 @@ def test_minhash_signature_cache_is_bounded(spark, sf_dir):
     assert n_cached() <= base
 
 
+def test_input_bytes_missing_file_is_unmeasurable(spark, tmp_path):
+    """The sliver-cache size gate sums the listed input files; a file
+    deleted since the listing makes the input unmeasurable (None), not
+    a reason to fall back to the plan-output size estimate. Only a
+    plan with no files at all uses the estimate."""
+    spark.range(50).write.parquet(str(tmp_path / "t"))
+    df = spark.read.parquet(str(tmp_path / "t"))
+    files = df.inputFiles()
+    on_disk = sum(
+        p.stat().st_size for p in (tmp_path / "t").glob("*.parquet")
+    )
+    assert files and dedup._input_bytes(df) == on_disk
+    (tmp_path / "t" / files[0].rsplit("/", 1)[1]).unlink()
+    assert dedup._input_bytes(df) is None
+    assert dedup._input_bytes(spark.range(10)) > 0
+
+
 def test_hard_negatives_excludes_anchor_label(spark, sf_dir):
     emb = load(spark, sf_dir, "embeddings")
     probe = emb.filter(F.col("vec_id") == 0).first()
@@ -867,10 +885,16 @@ def test_normalize_text_nbsp_and_dashes(spark):
     assert got == "a b-c-de"
 
 
-def test_embedding_cosine_pairs_arrow_sql_parity(spark):
-    """The opt-in Arrow block kernel must reproduce the SQL plan's
-    pairs exactly — same id_a < id_b enumeration, same round-6-then-
-    threshold predicate, including boundary cosines from duplicate
+def _id_vec_rows(df, *extra):
+    """(ids, vectors, rows) of a (doc_id, embedding, ...) frame."""
+    rows = df.select("doc_id", "embedding", *extra).collect()
+    return [r[0] for r in rows], [r[1] for r in rows], rows
+
+
+def test_embedding_cosine_pairs_match_brute_force(spark):
+    """The block kernel's pairs must equal an all-pairs reference
+    within blocks: id_a < id_b, cosine rounded half-up to 6 dp BEFORE
+    the threshold test, including boundary cosines from duplicate
     vectors (exactly 1.0)."""
     import random
 
@@ -884,29 +908,24 @@ def test_embedding_cosine_pairs_arrow_sql_parity(spark):
     df = spark.createDataFrame(
         rows, "doc_id long, embedding array<float>, blk int"
     )
+    ids, vecs, got_rows = _id_vec_rows(df, "blk")
+    blks = [r["blk"] for r in got_rows]
     for t in (0.5, 0.9):
-        a = {
+        got = {
             tuple(r)
             for r in dedup.embedding_cosine_pairs(
-                df, "embedding", "doc_id", "blk", threshold=t, impl="arrow"
+                df, "embedding", "doc_id", "blk", threshold=t
             ).collect()
         }
-        b = {
-            tuple(r)
-            for r in dedup.embedding_cosine_pairs(
-                df, "embedding", "doc_id", "blk", threshold=t, impl="sql"
-            ).collect()
-        }
-        assert a == b, f"threshold={t}: arrow^sql diff {a ^ b}"
-    assert any(r[2] == 1.0 for r in a)
+        want = reference.cosine_pairs(ids, vecs, t, keys=blks)
+        assert got == want, f"threshold={t}: diff {got ^ want}"
+    assert any(r[2] == 1.0 for r in got)
 
 
-def test_embedding_cosine_pairs_null_blocks_dropped_both_impls(spark):
-    """Rows with a NULL block key must be DROPPED by both impls: the
-    SQL equi self-join can never match them, and the arrow path now
-    filters them before grouping (it used to collect all null-block
-    rows into one pandas group and emit pairs among them — a silent
-    parity break the non-null-only parity test never saw)."""
+def test_embedding_cosine_pairs_null_blocks_dropped(spark):
+    """Rows with a NULL block key must be DROPPED: the kernel filters
+    them before grouping (it used to collect all null-block rows into
+    one pandas group and emit pairs among them)."""
     rows = [
         (1, [1.0, 0.0], 0),
         (2, [0.99, 0.01], 0),
@@ -916,22 +935,22 @@ def test_embedding_cosine_pairs_null_blocks_dropped_both_impls(spark):
     df = spark.createDataFrame(
         rows, "doc_id long, embedding array<float>, blk int"
     )
-    for impl in ("arrow", "sql"):
-        got = {
-            (r["id_a"], r["id_b"])
-            for r in dedup.embedding_cosine_pairs(
-                df, "embedding", "doc_id", "blk", threshold=0.5, impl=impl
-            ).collect()
-        }
-        assert got == {(1, 2)}, f"impl={impl}: {got}"
+    got = {
+        (r["id_a"], r["id_b"])
+        for r in dedup.embedding_cosine_pairs(
+            df, "embedding", "doc_id", "blk", threshold=0.5
+        ).collect()
+    }
+    ids, vecs, rows = _id_vec_rows(df, "blk")
+    want = reference.cosine_pairs(ids, vecs, 0.5, keys=[r["blk"] for r in rows])
+    assert got == {(a, b) for a, b, _ in want} == {(1, 2)}
 
 
 def test_embedding_cosine_pairs_block_chunked_kernel_exact(spark, monkeypatch):
     """Skew guard: with the kernel's dense-matrix budget shrunk to a
     few rows per block, a mass-duplicate corpus (every vector
     identical, all in ONE block — the degenerate 100 TB case) must
-    produce exactly the same pair set as the unchunked SQL plan:
-    all C(n,2) pairs at cosine 1.0."""
+    still produce every pair: all C(n,2) pairs at cosine 1.0."""
     from bytewax_spark.functions import similarity as sim
 
     monkeypatch.setattr(sim, "_KERNEL_BLOCK_BYTES", 256)  # ~2 rows/block at n=16
@@ -943,19 +962,30 @@ def test_embedding_cosine_pairs_block_chunked_kernel_exact(spark, monkeypatch):
     got = {
         (r["id_a"], r["id_b"], r["cosine"])
         for r in dedup.embedding_cosine_pairs(
-            df, "embedding", "doc_id", "blk", threshold=0.9, impl="arrow"
+            df, "embedding", "doc_id", "blk", threshold=0.9
         ).collect()
     }
     want = {(a, b, 1.0) for a in range(n) for b in range(a + 1, n)}
     assert got == want
 
 
-def test_lsh_multiprobe_pairs_arrow_sql_parity(spark):
-    """The multiprobe probe x home Arrow kernel must reproduce the SQL
-    join plan's pairs exactly: same once-per-pair emission (probed
-    from the lower id), same round-6-then-threshold predicate,
-    including duplicate vectors (cosine exactly 1.0) and pairs split
-    across a single hyperplane boundary."""
+def _multiprobe_reference(df, dims, n_planes, threshold, seed):
+    from bytewax_spark.functions.similarity import lsh_bucket_col
+
+    ids, vecs, rows = _id_vec_rows(
+        df, lsh_bucket_col("embedding", n_planes, dims, seed).alias("b")
+    )
+    return reference.cosine_pairs(
+        ids, vecs, threshold, keys=[r["b"] for r in rows], hamming=1
+    )
+
+
+def test_lsh_multiprobe_pairs_match_brute_force(spark):
+    """The multiprobe probe x home kernel must emit exactly the pairs
+    whose LSH buckets are at most one bit apart and whose rounded
+    cosine clears the threshold — once per pair (probed from the lower
+    id), including duplicate vectors (cosine exactly 1.0) and pairs
+    split across a single hyperplane boundary."""
     import random
 
     rng = random.Random(17)
@@ -965,28 +995,24 @@ def test_lsh_multiprobe_pairs_arrow_sql_parity(spark):
         rows.append((i, vec))
     rows.append((300, list(rows[0][1])))  # exact duplicate vector
     df = spark.createDataFrame(rows, "doc_id long, embedding array<float>")
-    kw = dict(dims=8, n_planes=3, threshold=0.4, seed=9, multiprobe=1)
-    a = {
+    kw = dict(dims=8, n_planes=3, threshold=0.4, seed=9)
+    got = [
         tuple(r)
         for r in dedup.lsh_cosine_pairs(
-            df, "embedding", "doc_id", impl="arrow", **kw
+            df, "embedding", "doc_id", multiprobe=1, **kw
         ).collect()
-    }
-    b = {
-        tuple(r)
-        for r in dedup.lsh_cosine_pairs(
-            df, "embedding", "doc_id", impl="sql", **kw
-        ).collect()
-    }
-    assert a == b, f"arrow^sql diff: {a ^ b}"
-    assert any(r[2] == 1.0 for r in a)
-    assert len(a) > 0
+    ]
+    want = _multiprobe_reference(df, **kw)
+    assert len(got) == len(set(got)), "a pair was emitted twice"
+    assert set(got) == want, f"diff: {set(got) ^ want}"
+    assert any(r[2] == 1.0 for r in got)
+    assert len(got) > 0
 
 
 def test_lsh_multiprobe_pairs_arrow_string_ids(spark):
     """The multiprobe kernel compares id arrays directly (the
-    id_probe < id_home mask), so non-numeric ids must survive: parity
-    with the SQL plan on string doc ids."""
+    id_probe < id_home mask), so non-numeric ids must survive: the
+    brute-force pair set on string doc ids."""
     import random
 
     rng = random.Random(5)
@@ -996,21 +1022,15 @@ def test_lsh_multiprobe_pairs_arrow_string_ids(spark):
     ]
     rows.append(("d900", list(rows[0][1])))  # duplicate vector
     df = spark.createDataFrame(rows, "doc_id string, embedding array<float>")
-    kw = dict(dims=6, n_planes=2, threshold=0.4, seed=3, multiprobe=1)
-    a = {
+    kw = dict(dims=6, n_planes=2, threshold=0.4, seed=3)
+    got = {
         tuple(r)
         for r in dedup.lsh_cosine_pairs(
-            df, "embedding", "doc_id", impl="arrow", **kw
+            df, "embedding", "doc_id", multiprobe=1, **kw
         ).collect()
     }
-    b = {
-        tuple(r)
-        for r in dedup.lsh_cosine_pairs(
-            df, "embedding", "doc_id", impl="sql", **kw
-        ).collect()
-    }
-    assert a == b
-    assert all(isinstance(t[0], str) and isinstance(t[1], str) for t in a)
+    assert got == _multiprobe_reference(df, **kw)
+    assert all(isinstance(t[0], str) and isinstance(t[1], str) for t in got)
 
 
 def test_minhash_lsh_recall_catches_identical_docs(spark):

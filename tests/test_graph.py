@@ -336,6 +336,45 @@ def test_adamic_adar_excludes_adjacent_and_sums(spark):
     assert got == {(1, 3): 2 * w, (2, 4): 2 * w}
 
 
+def _wedge_graph(relabel):
+    """A fixed random 14-node graph, relabelled node by node."""
+    import random
+
+    rng = random.Random(23)
+    return sorted(
+        {(relabel(rng.randrange(14)), relabel(rng.randrange(14))) for _ in range(40)}
+    )
+
+
+@pytest.mark.parametrize(
+    "relabel, dtype",
+    [
+        # string order is not numeric order: "n10" < "n2"
+        (lambda i: f"n{i}", "string"),
+        # negative and >32-bit ids around 0 and the 2^32 boundary
+        (lambda i: (i - 7) * (1 << 31) + i, "bigint"),
+    ],
+    ids=["string", "wide_long"],
+)
+def test_wedge_kernels_any_id_type(spark, relabel, dtype):
+    """common_neighbors and adamic_adar return the brute-force pairs
+    for any orderable id type, not only ids that pack into 32 bits."""
+    from tests import reference
+
+    pairs = _wedge_graph(relabel)
+    edges = spark.createDataFrame(pairs, f"id_a {dtype}, id_b {dtype}")
+    cn = {tuple(r) for r in graph.common_neighbors(edges, min_common=1).collect()}
+    assert cn == reference.common_neighbors(pairs, min_common=1)
+    assert any(c >= 2 for _, _, c, _ in cn)
+    capped = graph.common_neighbors(edges, min_common=1, max_degree=4).collect()
+    assert {tuple(r) for r in capped} == reference.common_neighbors(
+        pairs, min_common=1, max_degree=4
+    )
+    aa = {tuple(r) for r in graph.adamic_adar(edges).collect()}
+    assert aa == reference.adamic_adar(pairs)
+    assert aa
+
+
 def test_hits_star_graph_by_hand(spark):
     # hubs 1,2,3 all point at authority 10; hub 1 also points at 11.
     # round 1: ra(10)=3s, ra(11)=s (s=scale) -> auth 10 = 3/4, 11 = 1/4

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from bytewax_spark.functions import sampling, stats
+from tests import reference
 
 
 def _inter(spark):
@@ -267,11 +268,28 @@ def test_knn_agreement_duplicate_vectors_keep_exactly_k_neighbors(spark):
     assert r.n_nbrs == 2 and r.n_same == 2 and r.agree_ppm == 1_000_000
 
 
-def test_knn_lsh_arrow_and_sql_impls_agree(spark):
-    """The Arrow bucket kernel and the pure-JVM expression plan are two
-    implementations of ONE contract — identical verdict rows on a
-    corpus with planted structure (clusters + a mislabeled point +
-    buckets smaller than k+1)."""
+def _knn_lsh_reference(df, k, n_planes, dims, seed):
+    from bytewax_spark.functions.similarity import lsh_bucket_col
+
+    rows = df.select(
+        "vec_id", "embedding", "label",
+        lsh_bucket_col("embedding", n_planes, dims, seed).alias("b"),
+    ).collect()
+    return reference.knn_label_agreement(
+        [r["vec_id"] for r in rows],
+        [r["embedding"] for r in rows],
+        [r["label"] for r in rows],
+        k,
+        keys=[r["b"] for r in rows],
+    )
+
+
+def test_knn_lsh_matches_brute_force(spark):
+    """The Arrow bucket kernel must return the verdict rows of an
+    all-pairs reference inside each LSH bucket — neighbors by (rounded
+    cosine desc, id asc), self excluded — on a corpus with planted
+    structure (clusters + a mislabeled point + buckets smaller than
+    k+1)."""
     import random
 
     from bytewax_spark.functions.similarity import knn_label_agreement_lsh
@@ -287,20 +305,14 @@ def test_knn_lsh_arrow_and_sql_impls_agree(spark):
         rows, "vec_id long, embedding array<float>, label int"
     )
     kw = dict(k=5, n_planes=3, dims=4, seed=11)
-    arrow = {
+    got = {
         tuple(r)
         for r in knn_label_agreement_lsh(
-            df, "embedding", "vec_id", "label", impl="arrow", **kw
+            df, "embedding", "vec_id", "label", **kw
         ).collect()
     }
-    sql = {
-        tuple(r)
-        for r in knn_label_agreement_lsh(
-            df, "embedding", "vec_id", "label", impl="sql", **kw
-        ).collect()
-    }
-    assert arrow == sql
-    assert len(arrow) > 0
+    assert got == _knn_lsh_reference(df, **kw)
+    assert len(got) > 0
 
 
 def test_knn_lsh_small_bucket_emits_partial_neighborhood(spark):
@@ -376,7 +388,7 @@ def test_knn_lsh_arrow_block_chunked_degenerate_bucket(spark, monkeypatch):
     identical, so ALL rows hash into one LSH bucket — must not require
     one O(n^2) dense matrix in a single task. With the kernel's block
     budget shrunk to a few rows, the chunked kernel must still produce
-    exactly the SQL plan's verdict rows."""
+    exactly the brute-force verdict rows."""
     from bytewax_spark.functions import similarity as sim
 
     monkeypatch.setattr(sim, "_KERNEL_BLOCK_BYTES", 256)
@@ -386,20 +398,14 @@ def test_knn_lsh_arrow_block_chunked_degenerate_bucket(spark, monkeypatch):
         rows, "vec_id long, embedding array<float>, label int"
     )
     kw = dict(k=5, n_planes=2, dims=4, seed=11)
-    arrow = {
+    got = {
         tuple(r)
         for r in sim.knn_label_agreement_lsh(
-            df, "embedding", "vec_id", "label", impl="arrow", **kw
+            df, "embedding", "vec_id", "label", **kw
         ).collect()
     }
-    sql = {
-        tuple(r)
-        for r in sim.knn_label_agreement_lsh(
-            df, "embedding", "vec_id", "label", impl="sql", **kw
-        ).collect()
-    }
-    assert arrow == sql
-    assert len(arrow) == n  # every row audited despite the degenerate bucket
+    assert got == _knn_lsh_reference(df, **kw)
+    assert len(got) == n  # every row audited despite the degenerate bucket
 
 
 def test_arrow_kernels_preserve_string_ids(spark):
@@ -442,20 +448,14 @@ def test_arrow_kernels_preserve_string_ids(spark):
         assert a == b, f"exclude_same_id={excl}"
         assert all(isinstance(t[0], str) and isinstance(t[1], str) for t in a)
     kw = dict(k=3, n_planes=2, dims=4, seed=5)
-    ka = {
+    got = {
         tuple(r)
         for r in knn_label_agreement_lsh(
-            df, "embedding", "vec_id", "label", impl="arrow", **kw
+            df, "embedding", "vec_id", "label", **kw
         ).collect()
     }
-    ks = {
-        tuple(r)
-        for r in knn_label_agreement_lsh(
-            df, "embedding", "vec_id", "label", impl="sql", **kw
-        ).collect()
-    }
-    assert ka == ks
-    assert all(isinstance(t[0], str) for t in ka)
+    assert got == _knn_lsh_reference(df, **kw)
+    assert all(isinstance(t[0], str) for t in got)
 
 
 def test_round6_half_up_is_half_away_from_zero_not_bankers():

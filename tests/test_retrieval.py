@@ -324,12 +324,13 @@ def test_winnow_shared_substring_collides(spark):
     assert sorted(map(tuple, fps.collect())) == sorted(map(tuple, fps2.collect()))
 
 
-def test_winnow_arrow_sql_parity(spark):
-    # the r7 mapInArrow kernel must reproduce the SQL plan's rows
+def test_winnow_matches_reference(spark):
+    # the mapInArrow kernel must reproduce a pure-Python winnow
     # bit-for-bit, across the edge shapes: empty text, text shorter
     # than k, gram count below the window width, ties, and non-ascii
     # (code-point slicing vs utf-8 byte slicing)
     from bytewax_spark.functions import text as tx
+    from tests import reference
 
     rows = [
         (0, "the quick brown fox jumps over the lazy dog"),
@@ -344,11 +345,12 @@ def test_winnow_arrow_sql_parity(spark):
         (9, "the quick brown fox jumps over the lazy dog"),  # dup text
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    arrow = tx.winnow_fingerprints(df, "text", "doc_id", k=5, window=4)
-    sql = tx.winnow_fingerprints(df, "text", "doc_id", k=5, window=4, impl="sql")
-    assert sorted(map(tuple, arrow.collect())) == sorted(map(tuple, sql.collect()))
-    with pytest.raises(ValueError):
-        tx.winnow_fingerprints(df, "text", "doc_id", impl="nope")
+    got = [
+        tuple(r)
+        for r in tx.winnow_fingerprints(df, "text", "doc_id", k=5, window=4).collect()
+    ]
+    assert len(got) == len(set(got))
+    assert set(got) == reference.winnow(rows, k=5, window=4)
 
 
 # ---------------------------------------------------------------------------

@@ -13,12 +13,21 @@ Usage: python tools/check_oracle.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# check the checkout this script lives in, wherever it was copied to
+# and whatever the working directory: this process imports from it,
+# and so do the Python workers the Arrow kernels run in
+ROOT = str(Path(__file__).resolve().parent.parent)
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH", "")) if p
+)
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
